@@ -200,7 +200,7 @@ def _probe_speedup(sf_dir: str) -> dict[str, float]:
     core. The ``columns`` option pins the per-line path: clean full-schema
     blocks take the pyarrow C++ route, where whole-block parsing beats any
     Python-level line handling and the probe is deliberately not applied
-    (see _read_lines_fast)."""
+    (see TectonicJsonReader._arrow_block_reader)."""
     from pyspark.sql.datasource import EqualTo
 
     from tectonic_spark.operators.parser_ops import documents_jsonl

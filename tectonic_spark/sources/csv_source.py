@@ -98,6 +98,19 @@ def read_csv_header(path: str, config: CsvConfig) -> list[str]:
     return list(first.keys()) if isinstance(first, dict) else []
 
 
+def _require_string_columns(schema: StructType) -> None:
+    """Plan-time check of a user schema: every cell is a string, so a typed
+    column would fail at execution (fast path) or silently match nothing
+    (pushed filters compare strings)."""
+    for f in schema.fields:
+        if not isinstance(f.dataType, StringType):
+            raise ValueError(
+                f"tectonic-csv reads every column as STRING, but column {f.name!r} "
+                f"is {f.dataType.simpleString()}; declare it STRING and cast "
+                "downstream, e.g. .withColumn(name, col(name).cast(...))"
+            )
+
+
 class TectonicCsvDataSource(DataSource):
     @classmethod
     def name(cls) -> str:
@@ -119,12 +132,14 @@ class TectonicCsvDataSource(DataSource):
         return str(opt).lower() == "true"
 
     def reader(self, schema: StructType) -> "TectonicCsvReader":
+        _require_string_columns(schema)
         cls = TectonicCsvPushdownReader if self._pushdown_enabled() else TectonicCsvReader
         return cls(schema, dict(self.options))
 
     def streamReader(self, schema: StructType):  # noqa: N802 (Spark API name)
         from tectonic_spark.streaming.json_stream import TectonicFileStreamReader
 
+        _require_string_columns(schema)
         reader = TectonicCsvReader(schema, dict(self.options))
         splittable = not reader.multiline and (
             reader.config.row2 == b"\n"

@@ -12,6 +12,15 @@ Framing modes (json/Parser.scala:922-936) map to the ``mode`` option:
 * ``array`` — top-level ``[...]``, each element a row (UnwrapArray).
 * ``single`` — whole file is one value, one row (SingleValue).
 
+Lines mode reads ~4 MB newline-aligned blocks: pyarrow parses a block
+that provably follows the line grammar, one per-line routine the rest,
+with C ``json.loads`` or (``fastPath=false``) the event parser as the line
+decoder. The **line grammar**, the same on every route and in schema
+sampling: a line of JSON whitespace is skipped; any other line is a row
+only when it is exactly one standard JSON value in valid UTF-8, else it is
+malformed (NaN, two values on a line, a value split over lines, bad UTF-8,
+a lone surrogate escape — also inside a column the scan skips).
+
 Pushdown:
 
 * **Projection** — the scan schema's top-level fields (user ``.schema()``
@@ -32,7 +41,9 @@ are always FAILFAST, like the reference parser itself.
 
 from __future__ import annotations
 
+import json
 import os
+import re
 from collections.abc import Iterator
 from dataclasses import dataclass
 from typing import Any
@@ -40,8 +51,8 @@ from typing import Any
 from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 from pyspark.sql.types import StringType, StructField, StructType
 
-from tectonic_spark.core.json_parser import JsonParser, Mode
-from tectonic_spark.core.result import Failure, Partial
+from tectonic_spark.core.json_parser import JsonParser, Mode, _reject_constant
+from tectonic_spark.core.result import Failure, ParseException, Partial
 from tectonic_spark.core.value_builder import ValueBuilderPlate
 from tectonic_spark.sources.arrow_batch import DEFAULT_BATCH_ROWS, rows_to_batches
 from tectonic_spark.sources.pushdown import PushdownPlate, compile_filters
@@ -58,6 +69,51 @@ _CHUNK = 4 * 1024 * 1024
 _DEFAULT_MAX_VALUE_BYTES = 1 << 30  # streaming event path: bound, don't OOM
 _DEFAULT_RESUME_WINDOW = 1 << 20  # mid-value resume window (reference: 1 MiB)
 _SAMPLE_BYTES = 8 * 1024 * 1024
+_JSON_WS = b" \t\r"  # JSON whitespace within a line
+# what a line decoder raises for a malformed line
+_MALFORMED = (ValueError, RecursionError, ParseException)
+# C json.loads under core's constant rule (NaN/Infinity are not JSON)
+_decode_json = json.JSONDecoder(parse_constant=_reject_constant).decode
+# the escapes of UTF-16 surrogates, paired or lone
+_SURROGATE_ESCAPE = re.compile(rb"\\u[dD][89a-fA-F]")
+# pyarrow's non-standard constants, each with its first byte
+_ARROW_CONSTANTS = (
+    (b"N", re.compile(rb"NaN[\s,\]}]")),
+    (b"I", re.compile(rb"Inf(?:inity)?[\s,\]}]")),
+)
+
+
+def _line_value(line: bytes) -> Any:
+    """The line grammar (module docstring): the line's one JSON value, or
+    ValueError. A leading BOM is ignored; a lone surrogate has no UTF-8
+    form, so it could not become an Arrow string."""
+    value = _decode_json(line.decode("utf-8-sig"))
+    if _SURROGATE_ESCAPE.search(line):
+        try:
+            json.dumps(value, ensure_ascii=False).encode("utf-8")
+        except UnicodeEncodeError:
+            raise ValueError("lone surrogate escape in a string") from None
+    return value
+
+
+def _has_constant(block: bytes) -> bool:
+    """True when a constant pyarrow reads but JSON lacks (``NaN``, ``Inf``,
+    ``Infinity``, signed or not, then a byte that may end a value) stands
+    where a value can start: after ``:``, ``,`` or ``[`` and JSON
+    whitespace. Sound for a block whose lines all start with ``{``; a hit
+    inside a string only costs the block its pyarrow route."""
+    for first, token in _ARROW_CONSTANTS:
+        if first not in block:  # memchr before the slower regex scan
+            continue
+        for m in token.finditer(block):
+            j = m.start() - 1
+            if j >= 0 and block[j] == 0x2D:  # '-'
+                j -= 1
+            while j >= 0 and block[j] in b" \t\r\n":
+                j -= 1
+            if j >= 0 and block[j] in b":,[":
+                return True
+    return False
 
 
 def list_input_files(path: str, suffix: str | None = None) -> list[str]:
@@ -171,39 +227,21 @@ def _aligned_start(fh, split: FileSplit) -> int:
 
 def read_split_chunks(split: FileSplit, chunk_bytes: int = _CHUNK) -> Iterator[bytes]:
     """Yield ~chunk_bytes **newline-aligned** blocks covering exactly the
-    lines this split owns (the bulk-absorb fast path — one absorb per block,
-    not per line). Alignment means every block is a run of complete lines,
-    so a parse failure's blast radius is one block and the parser holds no
-    cross-block state."""
-    if split.file.lower().endswith(_COMPRESSED_EXTS):
-        # whole-file split over the DECOMPRESSED stream: the split's byte
-        # bounds are compressed-size bookkeeping only, so read to EOF
-        with open_input(split.file) as fh:
-            carry = b""
-            while True:
-                chunk = fh.read(chunk_bytes)
-                if not chunk:
-                    break
-                chunk = carry + chunk
-                cut = chunk.rfind(b"\n")
-                if cut < 0:
-                    carry = chunk
-                    continue
-                carry = chunk[cut + 1 :]
-                yield chunk[: cut + 1]
-            if carry:
-                yield carry
-        return
-    with open(split.file, "rb") as fh:
-        pos = _aligned_start(fh, split)
+    lines this split owns: every block is a run of complete lines. A
+    compressed file is one whole-file split over the DECOMPRESSED stream:
+    its byte bounds are compressed-size bookkeeping only, so it is read
+    to EOF."""
+    compressed = split.file.lower().endswith(_COMPRESSED_EXTS)
+    with open_input(split.file) as fh:
+        pos = 0 if compressed else _aligned_start(fh, split)
+        end = float("inf") if compressed else split.end
         carry = b""
-        while pos < split.end:
-            take = min(chunk_bytes, split.end - pos)
-            chunk = fh.read(take)
+        while pos < end:
+            chunk = fh.read(min(chunk_bytes, end - pos))
             if not chunk:
                 break
             pos += len(chunk)
-            if pos >= split.end and not chunk.endswith(b"\n"):
+            if pos >= end and not chunk.endswith(b"\n"):
                 tail = fh.readline()  # finish the straddling line
                 if tail:
                     chunk += tail
@@ -307,20 +345,17 @@ def _parse_file_prefix(
     if max_rows <= 0:
         return []
     if mode == "lines":
-        # per-line sampling via the C json parser: malformed lines don't
-        # abort inference
-        import json as _json
-
+        # per-line sampling under the reader's line grammar: a line the
+        # reader calls malformed does not shape the schema
         rows: list[Any] = []
         with open_input(path) as fh:
             read = 0
             for line in fh:
                 read += len(line)
-                if line.strip():
-                    try:
-                        rows.append(_json.loads(line))
-                    except ValueError:
-                        pass
+                try:
+                    rows.append(_line_value(line))
+                except _MALFORMED:
+                    pass  # blank or malformed
                 if len(rows) >= max_rows or read >= max_bytes:
                     break
         return rows[:max_rows]
@@ -450,11 +485,8 @@ class TectonicJsonReader(DataSourceReader):
         self.parse_mode = options.get("parsemode", "PERMISSIVE").upper()
         self.corrupt_col = options.get("columnnameofcorruptrecord")
         self.batch_rows = int(options.get("batchrows", DEFAULT_BATCH_ROWS))
-        # lines-mode fast path: complete NDJSON rows parse through the
-        # C-accelerated json module (~20x the Python event loop); the event
-        # parser stays the semantics/pushdown engine (values/array/single
-        # modes, skipped-bytes metrics, golden event tests) and is forced
-        # with fastPath=false
+        # fastPath=false forces the event parser (the pushdown engine) where
+        # the C json module and pyarrow would otherwise serve
         self.fast_path = str(options.get("fastpath", "true")).lower() != "false"
         mvb = options.get("maxvaluebytes")
         self.max_value_bytes = int(mvb) if mvb is not None else None
@@ -607,24 +639,83 @@ class TectonicJsonReader(DataSourceReader):
                     break
 
     def _read_lines(self, split: FileSplit):
-        """lines mode: each newline-aligned block (a run of complete lines,
-        NDJSON contract) parses with its own parser; a block that fails
-        anywhere — including at finish, when a malformed value's extent
-        swallows the rest of the block — is re-parsed line-by-line
-        (PERMISSIVE / DROPMALFORMED blast radius of a single line).
-        Batches stream out per block — a split never buffers more than one
-        block of rows."""
-        if self.fast_path:
-            yield from self._read_lines_fast(split)
-            return
+        """lines mode: one loop over the split's newline-aligned blocks. A
+        block the pyarrow route vouches for (:meth:`_arrow_block_reader`)
+        becomes Arrow whole; any other goes through
+        :meth:`_lines_to_batches` with the route's line decoder, under the
+        line grammar of the module docstring. Batches stream out per block —
+        a split never buffers more than one block of rows."""
+        arrow = self._arrow_block_reader() if self.fast_path else None
+        decode = self._json_decoder if self.fast_path else self._event_decoder()
+        probe = self._build_line_probe()
         for block in read_split_chunks(split):
-            corrupt: list[str | None] | None = None
-            rows, error = self._parse_block(block)
-            if error is not None:
+            table = arrow(block) if arrow is not None else None
+            if table is None:
+                yield from self._lines_to_batches(block.split(b"\n"), decode, probe)
+                continue
+            for lo in range(0, table.num_rows, self.batch_rows):
+                yield from table.slice(lo, self.batch_rows).combine_chunks().to_batches()
+
+    def _lines_to_batches(self, lines: list[bytes], decode, probe):
+        """The one per-line routine: skip blank lines, apply the byte probe,
+        decode, apply ``parseMode`` to malformed lines, emit Arrow.
+        ``decode(line)`` returns the line's rows that pass the pushed tests
+        (zero or one), or raises for a malformed line."""
+        rows: list[Any] = []
+        corrupt: list[str | None] = []
+        for line in lines:
+            if not line.strip(_JSON_WS):
+                continue
+            if probe is not None and not probe(line):
+                continue
+            try:
+                kept = decode(line)
+            except _MALFORMED as e:
                 if self.parse_mode == "FAILFAST":
-                    raise error
-                rows, corrupt = self._reparse_block(block)
-            yield from self._to_batches(rows, corrupt)
+                    raise ValueError(
+                        f"failed to parse JSON line ({e}): {line[:120]!r}"
+                    ) from e
+                if self.parse_mode == "PERMISSIVE":
+                    rows.append(None)  # all-null data columns
+                    corrupt.append(line.decode("utf-8", errors="replace"))
+                continue  # DROPMALFORMED swallows the line
+            rows.extend(kept)
+            corrupt.extend([None] * len(kept))
+        yield from self._to_batches(rows, corrupt)
+
+    def _json_decoder(self, line: bytes) -> list[Any]:
+        """Default line decoder: C ``json.loads`` under the line grammar,
+        then the pushed tests and the ``columns`` pruning."""
+        row = _line_value(line)
+        return [self._maybe_prune(row)] if self._row_passes(row) else []
+
+    def _event_decoder(self):
+        """``fastPath=false`` line decoder: one event parser per line into a
+        PushdownPlate reused across lines (replaced after a failed line that
+        may have left a half-built row). Bytes the projection skipped, and
+        escapes (core's ``\\u`` decoding is lenient), are not checked by the
+        event grammar, so such lines are confirmed by :func:`_line_value`."""
+        plate = self._new_plate()
+
+        def decode(line: bytes) -> list[Any]:
+            nonlocal plate
+            parser = JsonParser(plate, Mode.VALUE_STREAM)
+            dropped = plate.rows_skipped_total
+            try:
+                res = parser.parse_complete(line)
+                if isinstance(res, Failure):
+                    raise res.error
+            except _MALFORMED:
+                plate = self._new_plate()
+                raise
+            # rows the pushed tests dropped still count as values
+            if len(res.value) + plate.rows_skipped_total - dropped != 1:
+                raise ValueError("expected exactly one JSON value on the line")
+            if parser.skipped_bytes_total or b"\\" in line:
+                _line_value(line)
+            return res.value
+
+        return decode
 
     @property
     def _prune_keys(self) -> set | None:
@@ -668,8 +759,8 @@ class TectonicJsonReader(DataSourceReader):
         return True
 
     def _build_line_probe(self):
-        """Byte-level pre-filter for the fast lines path (the Mison key-hint
-        idea, reference README.md:7,101, applied pre-``json.loads``): from
+        """Byte-level pre-filter of the per-line routine (the Mison key-hint
+        idea, reference README.md:7,101, applied before decoding): from
         the pushed filters, derive byte patterns a MATCHING line must
         contain — the filter column's ``"key"`` bytes when a null cell
         definitively fails the filter, plus the encoded needle for string
@@ -695,8 +786,6 @@ class TectonicJsonReader(DataSourceReader):
             or self.data_schema.fieldNames() == ["value"]  # scalars: no key bytes
         ):
             return None
-        import json as _json
-
         from pyspark.sql.datasource import (
             EqualTo,
             In,
@@ -706,7 +795,7 @@ class TectonicJsonReader(DataSourceReader):
         )
 
         def enc(s: str) -> bytes | None:
-            b = _json.dumps(s, ensure_ascii=False).encode()
+            b = json.dumps(s, ensure_ascii=False).encode()
             return None if b"\\" in b else b  # needle needs escaping → no probe
 
         # conjunction of any-of alternative sets; value needles are checked
@@ -758,14 +847,23 @@ class TectonicJsonReader(DataSourceReader):
 
         return probe
 
-    def _arrow_block_schema(self):
-        """Arrow schema for whole-block C++ parsing (pyarrow.json), or None
-        when the scan can't take that route: corrupt-record capture needs
-        per-line control, value-column scans have non-object rows, the
-        ``columns`` option must null (not fill) unprojected cells, and only
-        types pyarrow.json can parse qualify. Type mismatches at parse time
-        raise ArrowInvalid, which routes that block to the per-line path —
-        so semantics are identical either way."""
+    def _arrow_block_reader(self):
+        """Whole-block C++ parsing (pyarrow.json) against the explicit scan
+        schema: a callable ``block -> Table | None``, or None when the scan
+        can't take that route: corrupt-record capture needs per-line
+        control, value-column scans have non-object rows, the ``columns``
+        option must null (not fill) unprojected cells, and only types
+        pyarrow.json can parse qualify.
+
+        pyarrow ignores where newlines fall, accepts NaN/Inf/Infinity and
+        skips UTF-8 checks in fields it ignores, so a table is kept only when
+        every line starts with ``{`` and ends with ``}`` (``}`` then ``{``
+        never occurs inside a value), there is one row per line, no such
+        constant can stand as a value (:func:`_has_constant`), and the block
+        is valid UTF-8. pyarrow rejects the rest of what the grammar
+        rejects. Other blocks (blank or padded lines too) go line by line.
+        No line probe here: the C++ parse beats Python line probing even at
+        a 5% match rate (measured 246 vs 166 MB/s)."""
         if (
             (self.corrupt_col and self.corrupt_col in self.schema.fieldNames())
             or self._prune_keys is not None
@@ -774,18 +872,14 @@ class TectonicJsonReader(DataSourceReader):
         ):
             return None
         import pyarrow as pa
+        import pyarrow.json as paj
 
         def ok(t) -> bool:
             if pa.types.is_struct(t):
                 return all(ok(f.type) for f in t)
             if pa.types.is_list(t):
                 return ok(t.value_type)
-            return (
-                pa.types.is_int64(t)
-                or pa.types.is_float64(t)
-                or pa.types.is_boolean(t)
-                or pa.types.is_string(t)
-            )
+            return t in (pa.int64(), pa.float64(), pa.bool_(), pa.string())
 
         from tectonic_spark.sources.arrow_batch import arrow_schema_for
 
@@ -793,124 +887,36 @@ class TectonicJsonReader(DataSourceReader):
             arrow_schema = arrow_schema_for(self.schema)
         except Exception:  # noqa: BLE001 - unconvertible type → python path
             return None
-        return arrow_schema if all(ok(f.type) for f in arrow_schema) else None
+        if not all(ok(f.type) for f in arrow_schema):
+            return None
+        parse_opts = paj.ParseOptions(
+            explicit_schema=arrow_schema, unexpected_field_behavior="ignore"
+        )
+        # tasks already saturate the executor's cores; nested arrow threads
+        # would oversubscribe
+        read_opts = paj.ReadOptions(use_threads=False)
 
-    def _read_lines_fast(self, split: FileSplit):
-        """Fast lines path. Clean NDJSON blocks parse whole through
-        pyarrow.json (C++, ~4x the per-line json.loads rate) against the
-        explicit scan schema; any block pyarrow rejects (malformed line,
-        type surprise) falls back to the per-line path below, which
-        preserves PERMISSIVE/DROPMALFORMED/FAILFAST semantics exactly. A
-        byte-level probe drops definitively non-matching lines before
-        either parse."""
-        has_corrupt = bool(self.corrupt_col) and self.corrupt_col in self.schema.fieldNames()
-        probe = self._build_line_probe()
-        arrow_schema = self._arrow_block_schema()
-        if arrow_schema is not None:
-            import pyarrow as pa
-            import pyarrow.json as paj
-
-            parse_opts = paj.ParseOptions(
-                explicit_schema=arrow_schema, unexpected_field_behavior="ignore"
-            )
-            # tasks already saturate the executor's cores; nested arrow
-            # threads would oversubscribe
-            read_opts = paj.ReadOptions(use_threads=False)
-
-        for block in read_split_chunks(split):
-            if arrow_schema is not None and block.strip():
-                # NO probe here: C++ whole-block parse (~250 MB/s/core)
-                # beats Python line-splitting + probe even at high filter
-                # selectivity — measured 246 vs 166 MB/s at 5% match rate.
-                # The probe pays off only where per-line Python runs anyway.
-                try:
-                    table = paj.read_json(
-                        pa.BufferReader(block),
-                        parse_options=parse_opts,
-                        read_options=read_opts,
-                    )
-                except pa.ArrowInvalid:
-                    pass  # malformed / type surprise → per-line semantics
-                else:
-                    for lo in range(0, table.num_rows, self.batch_rows):
-                        chunk = table.slice(lo, self.batch_rows).combine_chunks()
-                        yield from chunk.to_batches()
-                    continue
-            yield from self._python_lines_block(block, probe, has_corrupt)
-
-    def _python_lines_block(self, block: bytes, probe, has_corrupt: bool):
-        """Per-line parse of one block: full malformed-row semantics and
-        pre-Arrow pushdown test application."""
-        import json as _json
-
-        rows: list[Any] = []
-        corrupt: list[str | None] = []
-        for line in block.split(b"\n"):
-            if not line.strip():
-                continue
-            if probe is not None and not probe(line):
-                continue
+        def read(block: bytes):
+            n = block.count(b"\n") + 1 - block.endswith(b"\n")
+            if not (
+                block.startswith(b"{")
+                and block.endswith((b"}", b"}\n", b"}\r\n"))
+                and (block.count(b"}\n{") == n - 1 or block.count(b"}\r\n{") == n - 1)
+            ):
+                return None  # blank, padded or non-object lines: per line
+            if _has_constant(block):
+                return None
             try:
-                row = _json.loads(line)
-            except ValueError as e:
-                if self.parse_mode == "FAILFAST":
-                    raise ValueError(
-                        f"failed to parse JSON line ({e}): {line[:120]!r}"
-                    ) from e
-                if self.parse_mode == "PERMISSIVE":
-                    rows.append(None)
-                    corrupt.append(line.decode("utf-8", errors="replace"))
-                continue  # DROPMALFORMED swallows the line
-            if self._row_passes(row):
-                rows.append(self._maybe_prune(row))
-                corrupt.append(None)
-        yield from self._to_batches(rows, corrupt if has_corrupt else None)
+                if not block.isascii():
+                    block.decode("utf-8")
+                table = paj.read_json(
+                    pa.BufferReader(block), parse_options=parse_opts, read_options=read_opts
+                )
+            except (UnicodeDecodeError, pa.ArrowInvalid):
+                return None
+            return table if table.num_rows == n else None
 
-    def _parse_block(self, block: bytes):
-        """Parse one self-contained block: absorb + finish, draining any
-        BREAK_BATCH partials. Returns (rows, None) or (None, error)."""
-        parser = JsonParser(self._new_plate(), Mode.VALUE_STREAM)
-        rows: list[Any] = []
-
-        def phases():
-            yield parser.absorb(block)  # generator: finish() stays lazy
-            yield parser.finish()
-
-        for res in phases():
-            while True:
-                if isinstance(res, Failure):
-                    return None, res.error
-                rows.extend(res.value)
-                if not isinstance(res, Partial):
-                    break
-                res = parser.resume()
-        return rows, None
-
-    def _reparse_block(self, block: bytes):
-        """Error-isolating slow path, only for blocks with malformed rows:
-        one parser per line (a6 parity — the reference can only FAILFAST,
-        exceptions.scala:24; per-line recovery is the Spark-reader model)."""
-        rows: list[Any] = []
-        corrupt: list[str | None] = []
-        for line in block.split(b"\n"):
-            if not line.strip():
-                continue
-            parser = JsonParser(self._new_plate(), Mode.VALUE_STREAM)
-            line_rows: list[Any] = []
-            res = parser.parse_complete(line)
-            while not isinstance(res, Failure):
-                line_rows.extend(res.value)
-                if not isinstance(res, Partial):
-                    break
-                res = parser.resume()
-            if not isinstance(res, Failure):
-                rows.extend(line_rows)
-                corrupt.extend([None] * len(line_rows))
-            elif self.parse_mode == "PERMISSIVE":
-                rows.append(None)  # all-null data columns
-                corrupt.append(line.decode("utf-8", errors="replace"))
-            # DROPMALFORMED: swallow the line
-        return rows, corrupt
+        return read
 
     def _to_batches(self, rows: list[Any], corrupt_raw: list[str | None] | None = None):
         data_schema = self.data_schema

@@ -456,6 +456,87 @@ class TestJsonDataSource:
             df.collect()
 
 
+def _read_routes(tmp_path, data: bytes, corrupt: bool) -> dict:
+    """Rows of one PERMISSIVE lines-mode read of ``data`` (schema
+    ``a DOUBLE, s STRING``) on each route of ``_read``."""
+    from pyspark.sql.types import DoubleType, StringType, StructField, StructType
+
+    from tests.test_json_reader_property import ROUTES, _read
+
+    p = tmp_path / "lines.json"
+    p.write_bytes(data)
+    schema = StructType([StructField("a", DoubleType()), StructField("s", StringType())])
+    return {
+        rt: _read(str(p), len(data), rt, "PERMISSIVE", corrupt, schema=schema)
+        for rt in ROUTES
+    }
+
+
+class TestLineGrammar:
+    """Lines mode: a line is a row only when it is exactly one standard JSON
+    value in valid UTF-8, on every route. Each case below once differed
+    between routes or crashed the task; Spark's JSON reader decides them
+    the same way (NaN aside, which it reads as a double)."""
+
+    GOOD = {"a": 1.5, "s": None}
+    NULL = {"a": None, "s": None}
+
+    def _assert_malformed(self, tmp_path, bad: bytes, n_rows: int = 1):
+        data = bad + b'\n{"a": 1.5}\n'
+        for route, rows in _read_routes(tmp_path, data, corrupt=False).items():
+            assert rows == [self.NULL] * n_rows + [self.GOOD], route
+        raw = bad.decode("utf-8", errors="replace").split("\n")
+        for route, rows in _read_routes(tmp_path, data, corrupt=True).items():
+            assert rows == [dict(self.NULL, _corrupt=r) for r in raw] + [
+                dict(self.GOOD, _corrupt=None)
+            ], route
+
+    def test_nan_is_malformed(self, tmp_path):
+        self._assert_malformed(tmp_path, b'{"a": NaN}')
+        self._assert_malformed(tmp_path, b'{"a": 1.0, "z": -Infinity}')  # skipped key
+        # pyarrow also reads the short form
+        self._assert_malformed(tmp_path, b'{"a": Inf}')
+        self._assert_malformed(tmp_path, b'{"a": 1.0, "z": [-Inf]}')
+
+    def test_constant_inside_a_string_keeps_the_block_route(self, tmp_path):
+        from pyspark.sql.types import DoubleType, StringType, StructField, StructType
+
+        from tectonic_spark.sources.json_source import TectonicJsonReader
+
+        schema = StructType([StructField("a", DoubleType()), StructField("s", StringType())])
+        read = TectonicJsonReader(schema, {"path": str(tmp_path)}, "lines")._arrow_block_reader()
+        block = b'{"a": 1.5, "s": "NaN Info -Inf"}\n{"a": 2.5, "s": "Infinity"}\n'
+        assert read(block).to_pylist() == [
+            {"a": 1.5, "s": "NaN Info -Inf"},
+            {"a": 2.5, "s": "Infinity"},
+        ]
+        assert read(b'{"a": 1.5, "s": "x"}\n{"a": -Inf, "s": "y"}\n') is None
+
+    def test_invalid_utf8_is_malformed(self, tmp_path):
+        self._assert_malformed(tmp_path, b'{"a": 1.0, "s": "x\xffy"}')
+        self._assert_malformed(tmp_path, b'{"a": 1.0, "z": "x\xffy"}')  # skipped key
+
+    def test_two_values_on_a_line_is_malformed(self, tmp_path):
+        self._assert_malformed(tmp_path, b'{"a":1.0} {"a":2.0}')
+
+    def test_value_split_over_two_lines_is_two_malformed_rows(self, tmp_path):
+        self._assert_malformed(tmp_path, b'{"a":\n 1.0}', n_rows=2)
+
+    def test_lone_surrogate_escape_is_malformed_not_a_crash(self, tmp_path):
+        self._assert_malformed(tmp_path, b'{"a": 1.0, "s": "\\ud800"}')
+        self._assert_malformed(tmp_path, b'{"a": 1.0, "z": "\\udc00"}')  # skipped key
+        pair = b'{"a": 1.5, "s": "\\ud83d\\ude00"}\n'
+        for route, rows in _read_routes(tmp_path, pair, corrupt=False).items():
+            assert rows == [{"a": 1.5, "s": "\U0001f600"}], route
+
+    def test_malformed_line_does_not_shape_the_schema(self, tmp_path):
+        from tectonic_spark.sources.json_source import TectonicJsonDataSource
+
+        p = tmp_path / "s.json"
+        p.write_bytes(b'{"a": 1, "n": NaN}\n{"a": 2} {"b": 3}\n{"a": 3}\n')
+        assert TectonicJsonDataSource({"path": str(p)}).schema().fieldNames() == ["a"]
+
+
 class TestCsvDataSource:
     def test_roundtrip_unix(self, spark, tmp_path):
         p = tmp_path / "t.csv"
@@ -466,6 +547,22 @@ class TestCsvDataSource:
             .load(str(p))
         )
         assert sorted((r.x, r.y) for r in df.collect()) == [("1", "a"), ("2", "b"), ("3", "c")]
+
+    def test_typed_user_schema_rejected_at_plan_time(self, spark, tmp_path):
+        p = tmp_path / "t.csv"
+        p.write_text("k,s,v\n3,a,1.5\n4,b,2.5\n")
+        df = (
+            spark.read.format("tectonic-csv")
+            .option("lineSep", "\n")
+            .schema("k BIGINT, s STRING, v DOUBLE")
+            .load(str(p))
+        )
+        with pytest.raises(Exception, match="column 'k' is bigint.*cast"):
+            df.filter("k = 3").collect()
+        ok = spark.read.format("tectonic-csv").option("lineSep", "\n").schema(
+            "k STRING, s STRING, v STRING"
+        ).load(str(p))
+        assert ok.filter("CAST(k AS BIGINT) = 3").count() == 1
 
     def test_headerless_excel_names(self, spark, tmp_path):
         p = tmp_path / "t.csv"
