@@ -205,13 +205,14 @@ def _probe_speedup(sf_dir: str) -> dict[str, float]:
 
     from tectonic_spark.operators.parser_ops import documents_jsonl
     from tectonic_spark.sources.json_source import (
+        FilePartition,
         FileSplit,
         TectonicJsonPushdownDataSource,
     )
 
     path = documents_jsonl(sf_dir)
     size = os.path.getsize(path)
-    split = FileSplit(path, 0, size, size)
+    split = FilePartition((FileSplit(path, 0, size, size),))
 
     def run(lineprobe: str) -> tuple[float, int]:
         ds = TectonicJsonPushdownDataSource(
@@ -249,13 +250,13 @@ def _csv_reader_mbps(sf_dir: str) -> dict[str, float]:
     cells → Arrow) — the pyarrow.csv block path on a clean fixture."""
     from tectonic_spark.operators.parser_ops import documents_csv
     from tectonic_spark.sources.csv_source import TectonicCsvDataSource
-    from tectonic_spark.sources.json_source import FileSplit
+    from tectonic_spark.sources.json_source import FilePartition, FileSplit
 
     path = documents_csv(sf_dir)
     size = os.path.getsize(path)
     ds = TectonicCsvDataSource(options={"path": path, "linesep": "\n"})
     reader = ds.reader(ds.schema())
-    split = FileSplit(path, 0, size, size)
+    split = FilePartition((FileSplit(path, 0, size, size),))
 
     def run() -> float:
         t0 = time.perf_counter()
@@ -936,7 +937,11 @@ def _parallel_scan_mbps(spark, sf_dir: str) -> dict[str, float]:
     # JSON parse ≈ 30 MB/s)
     import json as _json
 
-    from tectonic_spark.sources.json_source import FileSplit, TectonicJsonReader
+    from tectonic_spark.sources.json_source import (
+        FilePartition,
+        FileSplit,
+        TectonicJsonReader,
+    )
     from tectonic_spark.sources.schema_infer import infer_spark_schema
 
     size = os.path.getsize(path)
@@ -945,7 +950,7 @@ def _parallel_scan_mbps(spark, sf_dir: str) -> dict[str, float]:
             _json.loads(ln) for ln in f.read(1 << 20).split(b"\n")[:200] if ln.strip()
         ]
     reader_1 = TectonicJsonReader(infer_spark_schema(head), {"path": path}, "lines")
-    split = FileSplit(path, 0, size, size)
+    split = FilePartition((FileSplit(path, 0, size, size),))
 
     def run_core() -> float:
         t1 = time.perf_counter()

@@ -78,8 +78,9 @@ def _pr_oracle() -> str:
     "100 TB shape: per iteration ONE shuffle keyed on dst for the "
     "contribution aggregation (map-side combinable BIGINT sums); the "
     "edge list is computed once and reused across iterations; scores "
-    "are 16 bytes/node. The iteration count is a compile-time constant "
-    "— nothing crosses the driver.",
+    "are 16 bytes/node. The iteration count is a compile-time constant; "
+    "one bounded scalar, the node count, crosses the driver (it sets the "
+    "initial and teleport ranks).",
 )
 def c06_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark import StorageLevel

@@ -12,7 +12,9 @@ are flat string objects in the reference's model (README.md:89); use
 Scale: with ``multiLine=false`` (default — no quoted newlines in the data,
 same contract as Spark's own CSV reader) files are planned as byte-range
 splits aligned to row delimiters, so a 100 TB directory fans out across
-executors. ``multiLine=true`` honors quoted newlines, one partition/file.
+executors. ``multiLine=true`` honors quoted newlines, one range per file.
+Either way the ranges are packed into about one task per core, as in
+``tectonic-json`` (:func:`json_source.pack_splits`).
 
 Pushdown: column pruning maps to the parser-level ``projection`` (cells
 outside the scan schema are never delivered — ``skipped(n)`` metrics, a3
@@ -33,11 +35,11 @@ from tectonic_spark.core.result import Failure, ParseException
 from tectonic_spark.sources.arrow_batch import DEFAULT_BATCH_ROWS, rows_to_batches
 from tectonic_spark.sources.json_source import (
     _CHUNK,
-    _DEFAULT_SPLIT,
+    FilePartition,
     FileSplit,
     list_input_files,
     open_input,
-    plan_splits,
+    plan_partitions,
     read_split_chunks,
 )
 from tectonic_spark.sources.pushdown import PushdownPlate, compile_filters
@@ -124,6 +126,8 @@ class TectonicCsvDataSource(DataSource):
 
     # see TectonicJsonDataSource.pushdown_default — same driver-side choice
     pushdown_default = False
+    # see TectonicJsonDataSource.parallelism
+    parallelism: int | None = None
 
     def _pushdown_enabled(self) -> bool:
         opt = self.options.get("filterpushdown")
@@ -134,7 +138,7 @@ class TectonicCsvDataSource(DataSource):
     def reader(self, schema: StructType) -> "TectonicCsvReader":
         _require_string_columns(schema)
         cls = TectonicCsvPushdownReader if self._pushdown_enabled() else TectonicCsvReader
-        return cls(schema, dict(self.options))
+        return cls(schema, dict(self.options), self.parallelism)
 
     def streamReader(self, schema: StructType):  # noqa: N802 (Spark API name)
         from tectonic_spark.streaming.json_stream import TectonicFileStreamReader
@@ -234,9 +238,12 @@ def compile_arrow_mask(filters: list, colnames: list[str]):
 
 
 class TectonicCsvReader(DataSourceReader):
-    def __init__(self, schema: StructType, options: dict) -> None:
+    def __init__(
+        self, schema: StructType, options: dict, parallelism: int | None = None
+    ) -> None:
         self.schema = schema
         self.options = options
+        self.parallelism = parallelism
         self.config = csv_config_from_options(options)
         self.batch_rows = int(options.get("batchrows", DEFAULT_BATCH_ROWS))
         self.multiline = _bool_opt(options, "multiline", False)
@@ -265,15 +272,13 @@ class TectonicCsvReader(DataSourceReader):
                 # ParseException with file/offset context
                 self.full_names = None
 
-    def partitions(self) -> list[FileSplit]:
-        files = list_input_files(self.options["path"])
-        split_bytes = int(self.options.get("splitsizebytes", _DEFAULT_SPLIT))
+    def partitions(self) -> list[FilePartition]:
         # byte-range splits align on b"\n", so they need a \n-terminated
         # row delimiter and no quoted newlines (multiLine=false contract)
         splittable = not self.multiline and (
             self.config.row2 == b"\n" or (self.config.row1, self.config.row2) == (b"\n", b"")
         )
-        return plan_splits(files, split_bytes, splittable=splittable)
+        return plan_partitions(self.options, splittable, self.parallelism)
 
     def _stdlib_dialect_ok(self) -> bool:
         """Can the stdlib C csv parser reproduce this config? Single-char
@@ -289,18 +294,20 @@ class TectonicCsvReader(DataSourceReader):
             and (c.row2 == b"\n" or (c.row1, c.row2) == (b"\n", b""))
         )
 
-    def read(self, partition: FileSplit):
+    def read(self, partition: FilePartition):
         # multiLine=true allows quoted newlines: block-splitting at \n
         # would cut records mid-cell, so that mode stays on the
         # incremental event parser (which is quoted-newline-exact)
         if self.fast_path and not self.multiline and self._stdlib_dialect_ok():
-            yield from self._read_fast(partition)
+            read_split = self._read_fast
         else:
-            yield from self._read_events(partition)
+            read_split = self._read_events
+        for split in partition.splits:
+            yield from read_split(split)
 
     # ------------------------------------------------------- stdlib fast path
 
-    def _read_fast(self, partition: FileSplit):
+    def _read_fast(self, split: FileSplit):
         """C-accelerated path: stdlib csv.reader over the split's lines
         (~9x the event pipeline). Semantics match the event parser: short /
         long rows are errors for header files ("missing records" parity,
@@ -321,12 +328,12 @@ class TectonicCsvReader(DataSourceReader):
             doublequote=c.escape == c.close_quote,
             escapechar=None if c.escape == c.close_quote else c.escape.decode(),
         )
-        whole_file = partition.start == 0 and partition.end == partition.file_size
-        chunks = _whole_file_chunks(partition) if whole_file else read_split_chunks(partition)
-        if partition.start == 0:
+        whole_file = split.start == 0 and split.end == split.file_size
+        chunks = _whole_file_chunks(split) if whole_file else read_split_chunks(split)
+        if split.start == 0:
             chunks = _strip_leading_bom(chunks)
-        at_eof = partition.end >= partition.file_size
-        skip_first = partition.start == 0 and c.header
+        at_eof = split.end >= split.file_size
+        skip_first = split.start == 0 and c.header
         full = self.full_names
         tests = self._tests
 
@@ -464,11 +471,11 @@ class TectonicCsvReader(DataSourceReader):
 
     # ------------------------------------------------------ event parser path
 
-    def _read_events(self, partition: FileSplit):
+    def _read_events(self, split: FileSplit):
         names = list(self.schema.fieldNames())
         filter_cols = set(self._tests or ())
         projection = self.required | filter_cols
-        mid_file = partition.start > 0
+        mid_file = split.start > 0
 
         plate = PushdownPlate(required=None, tests=self._tests)
         # headerless split config for mid-file ranges: positional names
@@ -509,8 +516,8 @@ class TectonicCsvReader(DataSourceReader):
 
             yield from rows_to_batches(norm(), self.schema, self.batch_rows)
 
-        whole_file = partition.start == 0 and partition.end == partition.file_size
-        chunks = _whole_file_chunks(partition) if whole_file else read_split_chunks(partition)
+        whole_file = split.start == 0 and split.end == split.file_size
+        chunks = _whole_file_chunks(split) if whole_file else read_split_chunks(split)
         for chunk in chunks:
             yield from to_batches(_drain(parser.absorb(chunk)))
         yield from to_batches(_drain(parser.finish()))
@@ -537,8 +544,8 @@ def _strip_leading_bom(chunks):
             yield chunk
 
 
-def _whole_file_chunks(partition: FileSplit):
-    with open_input(partition.file) as fh:
+def _whole_file_chunks(split: FileSplit):
+    with open_input(split.file) as fh:
         while True:
             chunk = fh.read(_CHUNK)
             if not chunk:

@@ -4,11 +4,14 @@ JSON parser core (SURVEY.md §7.5-7.6; reference S1, json/Parser.scala:95-920).
 Framing modes (json/Parser.scala:922-936) map to the ``mode`` option:
 
 * ``lines`` (default) — newline-delimited values (VALUE_STREAM framing with
-  an NDJSON layout guarantee). **Splittable**: files are planned as byte
-  ranges of ``splitSizeBytes`` aligned to newlines, so a 100 TB directory
-  fans out across every executor — same split model as Spark's native JSON.
+  an NDJSON layout guarantee). **Splittable**: a file is cut into byte
+  ranges of at most ``splitSizeBytes``, aligned to newlines, and the ranges
+  are packed in listing order into about one task per core (Spark's own
+  file-source rule, :func:`pack_splits`): a 100 TB directory fans out
+  across every executor, and many small files do not cost a task each.
 * ``values`` — whitespace-separated top-level values, no layout guarantee;
-  one partition per file, constant-memory incremental absorb.
+  one range per file (ranges packed as above), constant-memory
+  incremental absorb.
 * ``array`` — top-level ``[...]``, each element a row (UnwrapArray).
 * ``single`` — whole file is one value, one row (SingleValue).
 
@@ -180,7 +183,7 @@ def open_input(path: str):
 
 
 @dataclass
-class FileSplit(InputPartition):
+class FileSplit:
     """One planned byte range. ``start``>0 ⇒ skip to the first newline;
     readers always finish the value that straddles ``end`` (standard
     Hadoop text-split semantics, so every byte belongs to exactly one
@@ -190,6 +193,67 @@ class FileSplit(InputPartition):
     start: int
     end: int
     file_size: int
+
+
+@dataclass
+class FilePartition(InputPartition):
+    """One Spark task: byte ranges read one after another. ``end - start``
+    is the number of input bytes it covers (for one range, its offsets)."""
+
+    splits: tuple[FileSplit, ...]
+
+    @property
+    def start(self) -> int:
+        return self.splits[0].start if self.splits else 0
+
+    @property
+    def end(self) -> int:
+        return self.start + sum(s.end - s.start for s in self.splits)
+
+
+# what opening a range costs, in bytes read (Spark's
+# spark.sql.files.openCostInBytes default)
+_OPEN_COST = 4 * 1024 * 1024
+
+
+def pack_splits(
+    splits: list[FileSplit], split_bytes: int, parallelism: int
+) -> list[FilePartition]:
+    """Pack byte ranges, in listing order, into about one partition per
+    core (Spark's ``FilePartition.getFilePartitions``). A range costs its
+    length plus ``_OPEN_COST``, and joins the open partition while the
+    partition's cost plus the range's length stays within ``target``. A
+    partition also closes early when each remaining range must open its
+    own for the plan to reach ``min(len(splits), parallelism)``
+    partitions. Ranges are never cut."""
+    lengths = [s.end - s.start for s in splits]
+    total = sum(lengths) + len(splits) * _OPEN_COST
+    target = min(split_bytes, max(_OPEN_COST, total // parallelism))
+    want = min(len(splits), parallelism)
+    out: list[FilePartition] = []
+    group: list[FileSplit] = []
+    cost = 0
+    for i, (split, n) in enumerate(zip(splits, lengths)):
+        if group and (cost + n > target or len(splits) - i < want - len(out)):
+            out.append(FilePartition(tuple(group)))
+            group, cost = [], 0
+        group.append(split)
+        cost += n + _OPEN_COST
+    if group:
+        out.append(FilePartition(tuple(group)))
+    return out
+
+
+def plan_partitions(
+    options: dict, splittable: bool, parallelism: int | None
+) -> list[FilePartition]:
+    """The batch readers' plan: the ``path`` option's files as byte ranges
+    of at most ``splitSizeBytes``, packed for ``parallelism`` cores (the
+    registering session's; this machine's cores when not registered)."""
+    files = list_input_files(options["path"])
+    split_bytes = int(options.get("splitsizebytes", _DEFAULT_SPLIT))
+    splits = plan_splits(files, split_bytes, splittable)
+    return pack_splits(splits, split_bytes, parallelism or os.cpu_count() or 1)
 
 
 def plan_splits(
@@ -316,6 +380,9 @@ class TectonicJsonDataSource(DataSource):
     # the active session and registers the Pushdown subclass only when the
     # conf is on. The per-read option ``filterPushdown`` overrides either way.
     pushdown_default = False
+    # the registering session's defaultParallelism, set on the class that
+    # registration.py builds (None: the planner uses os.cpu_count())
+    parallelism: int | None = None
 
     def _pushdown_enabled(self) -> bool:
         opt = self.options.get("filterpushdown")
@@ -325,7 +392,7 @@ class TectonicJsonDataSource(DataSource):
 
     def reader(self, schema: StructType) -> "TectonicJsonReader":
         cls = TectonicJsonPushdownReader if self._pushdown_enabled() else TectonicJsonReader
-        return cls(schema, dict(self.options), self._mode())
+        return cls(schema, dict(self.options), self._mode(), self.parallelism)
 
     def streamReader(self, schema: StructType):  # noqa: N802 (Spark API name)
         from tectonic_spark.streaming.json_stream import TectonicJsonStreamReader
@@ -478,10 +545,13 @@ def _schema_paths(
 
 
 class TectonicJsonReader(DataSourceReader):
-    def __init__(self, schema: StructType, options: dict, mode: str) -> None:
+    def __init__(
+        self, schema: StructType, options: dict, mode: str, parallelism: int | None = None
+    ) -> None:
         self.schema = schema
         self.options = options
         self.mode = mode
+        self.parallelism = parallelism
         self.parse_mode = options.get("parsemode", "PERMISSIVE").upper()
         self.corrupt_col = options.get("columnnameofcorruptrecord")
         self.batch_rows = int(options.get("batchrows", DEFAULT_BATCH_ROWS))
@@ -521,18 +591,15 @@ class TectonicJsonReader(DataSourceReader):
             else _schema_paths(self.data_schema, names, cols_opt)
         )
 
-    def partitions(self) -> list[FileSplit]:
-        files = list_input_files(self.options["path"])
-        split_bytes = int(self.options.get("splitsizebytes", _DEFAULT_SPLIT))
-        return plan_splits(files, split_bytes, splittable=(self.mode == "lines"))
+    def partitions(self) -> list[FilePartition]:
+        return plan_partitions(self.options, self.mode == "lines", self.parallelism)
 
     # ------------------------------------------------------------------ read
 
-    def read(self, partition: FileSplit):
-        if self.mode == "lines":
-            yield from self._read_lines(partition)
-        else:
-            yield from self._read_stream(partition)
+    def read(self, partition: FilePartition):
+        read_split = self._read_lines if self.mode == "lines" else self._read_stream
+        for split in partition.splits:
+            yield from read_split(split)
 
     def _new_plate(self) -> PushdownPlate:
         # single-value-column scans carry their tests as ``value_col`` so

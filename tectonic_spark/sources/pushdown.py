@@ -39,6 +39,7 @@ from pyspark.sql.types import (
 from tectonic_spark.core.plate import Plate
 from tectonic_spark.core.signal import Signal
 from tectonic_spark.core.value_builder import ValueBuilderPlate
+from tectonic_spark.sources.schema_infer import to_double
 
 CONTINUE = Signal.CONTINUE
 
@@ -82,7 +83,7 @@ def _norm_scalar(v: Any, t: DataType) -> Any:
         return v if isinstance(v, int) and not isinstance(v, bool) else None
     if isinstance(t, DoubleType):
         if isinstance(v, (int, float)) and not isinstance(v, bool):
-            return float(v)
+            return to_double(v)
         return None
     return _UNDECIDED
 

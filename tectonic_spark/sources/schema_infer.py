@@ -26,6 +26,7 @@ from __future__ import annotations
 
 import decimal
 import json
+import math
 from typing import Any
 
 from pyspark.sql.types import (
@@ -142,6 +143,15 @@ def canonical_json(v: Any) -> str:
     return json.dumps(v, separators=(",", ":"), ensure_ascii=False)
 
 
+def to_double(v: int | float) -> float:
+    """``float(v)``; an int beyond the double range is ±inf, as pyarrow and
+    Spark read it."""
+    try:
+        return float(v)
+    except OverflowError:
+        return math.inf if v > 0 else -math.inf
+
+
 def _coerce(v: Any, t: DataType) -> Any:
     if v is None:
         return None
@@ -160,7 +170,7 @@ def _coerce(v: Any, t: DataType) -> Any:
     if isinstance(t, DoubleType):
         if isinstance(v, bool) or not isinstance(v, (int, float)):
             return None
-        return float(v)
+        return to_double(v)
     if isinstance(t, StructType):
         if not isinstance(v, dict):
             return None

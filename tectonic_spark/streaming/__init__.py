@@ -7,7 +7,7 @@ to Spark Structured Streaming:
 * :mod:`json_stream` — ``spark.readStream.format("tectonic-json")``:
   micro-batch file tailing with executor-side parsing (full
   DataSourceStreamReader: offsets are directory snapshots, partitions are
-  the same byte-range FileSplits as the batch path).
+  the same byte-range FileSplits as the batch path, one per partition).
 * :mod:`ops` — watermarked windows, streaming dedup, and a custom
   stateful operator built on ``applyInPandasWithState``.
 """

@@ -8,15 +8,17 @@ the Spark-idiomatic equivalent is a micro-batch file source:
   are assumed immutable once visible (the standard Spark file-source
   contract). An offset range's work is exactly the newly-appeared files.
 * **partitions(start, end)** plans the same byte-range :class:`FileSplit`
-  units as the batch reader, so a micro-batch containing a huge file still
-  fans out across executors — parsing never serializes onto the driver.
+  units as the batch reader, one range per :class:`FilePartition` (ranges
+  are not packed), so a micro-batch containing a huge file still fans out
+  across executors — parsing never serializes onto the driver.
 * **read(partition)** runs on executors and reuses the batch reader's
   block parser (projection pushdown included via the scan schema), emitting
   tuples in schema order.
 
 One generic reader serves both formats: the JSON and CSV DataSources pass
-their batch reader (which owns format config and the ``read(FileSplit)``
-loop) plus a splittability flag.
+their batch reader (which owns format config and the
+``read(FilePartition)`` loop over a partition's ranges) plus a
+splittability flag.
 """
 
 from __future__ import annotations
@@ -29,7 +31,7 @@ from pyspark.sql.types import StructType
 
 from tectonic_spark.sources.json_source import (
     _DEFAULT_SPLIT,
-    FileSplit,
+    FilePartition,
     list_input_files,
     plan_splits,
 )
@@ -113,7 +115,7 @@ class TectonicFileStreamReader(DataSourceStreamReader):
         self._dbg("latestOffset ->", sorted(snap))
         return {"files": dict(snap)}
 
-    def partitions(self, start: dict, end: dict) -> list[FileSplit]:
+    def partitions(self, start: dict, end: dict) -> list[FilePartition]:
         self._dbg("partitions start=", sorted(start.get("files", {})), "end=", sorted(end.get("files", {})))
         start_files = start.get("files", {})
         seen = set(start_files)
@@ -147,14 +149,12 @@ class TectonicFileStreamReader(DataSourceStreamReader):
             splittable=self.splittable,
             sizes={f: end_files[f] for f in new_files},
         )
-        # Spark requires ≥1 partition per micro-batch; use an empty marker
-        return splits or [FileSplit("", 0, 0, 0)]
+        # Spark requires ≥1 partition per micro-batch; use an empty one
+        return [FilePartition((s,)) for s in splits] or [FilePartition(())]
 
     # ------------------------------------------------------------------ read
 
-    def read(self, partition: FileSplit) -> Iterator[tuple]:
-        if not partition.file:
-            return
+    def read(self, partition: FilePartition) -> Iterator[tuple]:
         for batch in self._batch_reader.read(partition):
             for row in batch.to_pylist():
                 yield tuple(row[n] for n in self._names)

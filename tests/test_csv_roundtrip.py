@@ -102,7 +102,7 @@ def test_reader_fast_path_equals_event_path(t):
     from pyspark.sql.types import StringType, StructField, StructType
 
     from tectonic_spark.sources.csv_source import TectonicCsvReader
-    from tectonic_spark.sources.json_source import FileSplit
+    from tectonic_spark.sources.json_source import FilePartition, FileSplit
 
     names, rows = t
     data = _write_csv(names, rows)
@@ -111,7 +111,8 @@ def test_reader_fast_path_equals_event_path(t):
         p = f.name
     try:
         schema = StructType([StructField(n, StringType(), True) for n in names])
-        split = FileSplit(p, 0, os.path.getsize(p), os.path.getsize(p))
+        size = os.path.getsize(p)
+        split = FilePartition((FileSplit(p, 0, size, size),))
         out = {}
         for fp in ("true", "false"):
             r = TectonicCsvReader(schema, {"path": p, "linesep": "\n", "fastpath": fp})

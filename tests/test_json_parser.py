@@ -506,6 +506,7 @@ class TestMaxValueBytes:
         import pytest
 
         from tectonic_spark.sources.json_source import (
+            FilePartition,
             FileSplit,
             TectonicJsonDataSource,
         )
@@ -526,7 +527,7 @@ class TestMaxValueBytes:
         reader = ds.reader(ds.schema())
         size = big.stat().st_size
         with pytest.raises(Exception, match="maxValueBytes"):
-            for _ in reader.read(FileSplit(str(big), 0, size, size)):
+            for _ in reader.read(FilePartition((FileSplit(str(big), 0, size, size),))):
                 pass
 
 

@@ -9,11 +9,15 @@ import os
 
 import duckdb
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 from pyspark.sql.datasource import EqualTo, GreaterThan, IsNull, StringStartsWith
 
 from tectonic_spark.core.json_parser import JsonParser, Mode
 from tectonic_spark.sources.json_source import (
+    _OPEN_COST,
     FileSplit,
+    pack_splits,
     plan_splits,
     read_split_chunks,
 )
@@ -115,6 +119,102 @@ class TestSplits:
         splits = plan_splits([str(f)], 9, splittable=True)
         got = b"".join(b"".join(read_split_chunks(s)) for s in splits)
         assert got == data
+
+
+class TestSplitPacking:
+    """Byte ranges are packed, in listing order, into about one partition
+    per core (Spark's FilePartition.getFilePartitions rule)."""
+
+    @settings(max_examples=200, deadline=None)
+    @given(
+        st.lists(st.tuples(st.integers(0, 12 << 20), st.booleans()), max_size=40),
+        st.sampled_from([64 << 10, 1 << 20, 3 << 20, 4 << 20, 16 << 20, 128 << 20]),
+        st.integers(1, 16),
+    )
+    def test_packing_invariants(self, files, split_bytes, parallelism):
+        import pickle
+
+        names = [f"f{i:02}.json" + (".gz" if gz else "") for i, (_, gz) in enumerate(files)]
+        sizes = {n: size for n, (size, _) in zip(names, files)}
+        splits = plan_splits(names, split_bytes, splittable=True, sizes=sizes)
+        parts = pack_splits(splits, split_bytes, parallelism)
+        # every range exactly once, in listing order, never cut finer
+        assert [s for p in parts for s in p.splits] == splits
+        total = sum(s.end - s.start + _OPEN_COST for s in splits)
+        target = min(split_bytes, max(_OPEN_COST, total // parallelism))
+        for p in parts:
+            held = sum(s.end - s.start for s in p.splits)
+            # each range after the first also pays the open cost
+            assert held + (len(p.splits) - 1) * _OPEN_COST <= target or len(p.splits) == 1
+            assert p.end - p.start == held
+        assert len(parts) >= min(len(splits), parallelism)
+        for n in names:
+            if n.endswith(".gz"):  # a compressed file stays whole
+                assert [(s.start, s.end) for s in splits if s.file == n] == [(0, sizes[n])]
+        assert pickle.loads(pickle.dumps(parts)) == parts
+
+    def test_small_files_pack_four_to_a_core(self):
+        names = [f"part-{i:02}.json" for i in range(16)]
+        sizes = {n: 410_000 for n in names}
+        parts = pack_splits(plan_splits(names, 128 << 20, True, sizes), 128 << 20, 4)
+        assert [len(p.splits) for p in parts] == [4, 4, 4, 4]
+        # one big file stays one partition
+        big = plan_splits(["big.json"], 128 << 20, True, {"big.json": 26 << 20})
+        assert len(pack_splits(big, 128 << 20, 4)) == 1
+
+    @staticmethod
+    def _compare(spark, fmt, path, options, cols=None):
+        """Rows of the packed read and of a read planned one file per
+        partition (``splitSizeBytes`` = the largest file keeps each file one
+        range, and each range then costs more than the packing target)."""
+        max_file = max(p.stat().st_size for p in path.iterdir())
+
+        def read(**extra):
+            r = spark.read.format(fmt)
+            for k, v in {**options, **extra}.items():
+                r = r.option(k, v)
+            df = r.load(str(path))
+            return df.select(*cols) if cols else df
+
+        packed, per_file = read(), read(splitSizeBytes=max_file)
+        assert packed.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism
+        assert per_file.rdd.getNumPartitions() == 16
+        return packed.collect(), per_file.collect()
+
+    def test_json_small_files_pack_to_default_parallelism(self, spark, tmp_path):
+        d = tmp_path / "parts"
+        d.mkdir()
+        for f in range(16):
+            lines = [json.dumps({"id": f * 100 + i, "k": i % 7, "s": "x" * i}) for i in range(40)]
+            lines[f % 40] = lines[f % 40][:9]  # one cut line per file
+            (d / f"part-{f:02}.json").write_text("\n".join(lines) + "\n")
+        packed, per_file = self._compare(
+            spark, "tectonic-json", d, {"columnNameOfCorruptRecord": "_corrupt"}
+        )
+        assert packed == per_file
+        assert len(packed) == 640
+        assert sum(r._corrupt is not None for r in packed) == 16
+        for options, cols, n_rows in (
+            ({"parseMode": "DROPMALFORMED"}, None, 624),
+            ({"fastPath": "false"}, ["id", "k"], 640),
+        ):
+            packed, per_file = self._compare(spark, "tectonic-json", d, options, cols)
+            assert packed == per_file, options
+            assert len(packed) == n_rows, options
+
+    def test_csv_small_files_pack_and_drop_each_header(self, spark, tmp_path):
+        d = tmp_path / "parts"
+        d.mkdir()
+        for f in range(16):
+            rows = "".join(f"{f * 100 + i},v{i}\n" for i in range(30))
+            (d / f"part-{f:02}.csv").write_text("id,v\n" + rows)
+        packed, per_file = self._compare(
+            spark, "tectonic-csv", d, {"header": "true", "lineSep": "\n"}
+        )
+        assert packed == per_file
+        assert sorted(int(r.id) for r in packed) == sorted(
+            f * 100 + i for f in range(16) for i in range(30)
+        )
 
 
 # ----------------------------------------------------------------- pushdown
@@ -528,6 +628,29 @@ class TestLineGrammar:
         pair = b'{"a": 1.5, "s": "\\ud83d\\ude00"}\n'
         for route, rows in _read_routes(tmp_path, pair, corrupt=False).items():
             assert rows == [{"a": 1.5, "s": "\U0001f600"}], route
+
+    def test_out_of_range_int_in_double_column_is_inf(self, tmp_path):
+        # pyarrow and Spark read it as ±inf; float() would raise OverflowError
+        big = b"1" + b"0" * 400
+        data = b'{"a": ' + big + b'}\n{"a": -' + big + b', "s": "x"}\n'
+        inf = float("inf")
+        want = [{"a": inf, "s": None}, {"a": -inf, "s": "x"}]
+        for route, rows in _read_routes(tmp_path, data, corrupt=False).items():
+            assert rows == want, route
+        # a pushed filter tests the cell as the same ±inf (the per-line
+        # routes apply it; the pyarrow route leaves filtering to Spark)
+        from pyspark.sql.types import DoubleType, StringType, StructField, StructType
+
+        from tectonic_spark.sources.json_source import TectonicJsonPushdownReader
+
+        schema = StructType([StructField("a", DoubleType()), StructField("s", StringType())])
+        p = tmp_path / "lines.json"
+        for fast in ("true", "false"):
+            r = TectonicJsonPushdownReader(schema, {"path": str(p), "fastpath": fast}, "lines")
+            r._arrow_block_reader = lambda: None
+            r.pushFilters([GreaterThan(("a",), 1.0)])
+            rows = [row for part in r.partitions() for b in r.read(part) for row in b.to_pylist()]
+            assert rows == want[:1], fast
 
     def test_malformed_line_does_not_shape_the_schema(self, tmp_path):
         from tectonic_spark.sources.json_source import TectonicJsonDataSource
